@@ -80,7 +80,9 @@ _FIXED_WIDTH = {
 # UPPER BOUND on the frame's cardinality, so the broadcast gate can
 # prove "small enough" without running its eager measure job.
 # Generate (explode), Join, Union etc. can multiply rows and must
-# fall through to the measured pass.
+# fall through to the measured pass. One edge: a global (no-grouping)
+# Aggregate emits one row even over empty input, so with one present
+# the bound is max(footer sum, 1).
 _CARD_NONINCREASING = {
     "Project",
     "Filter",
@@ -94,20 +96,36 @@ _CARD_NONINCREASING = {
 }
 
 
+def local_path(uri: str) -> str | None:
+    """Filesystem path of a ``file:`` URI as ``DataFrame.inputFiles()``
+    reports it (percent-encoded: a space is ``%20``), or None for any
+    other scheme."""
+    from urllib.parse import unquote, urlparse
+
+    u = urlparse(uri)
+    return unquote(u.path) if u.scheme == "file" else None
+
+
 def _footer_rows_upper(df) -> int | None:
     """Exact row-count upper bound from the leaf parquet footers, or
     None when the bound cannot be proven cheaply: the plan must be
     cardinality-nonincreasing node by node (see _CARD_NONINCREASING)
     and every input must be a locally readable parquet file (footer
-    metadata read on the driver — no Spark job). Any failure returns
-    None and the caller falls back to the measured pass, so remote
-    storage or exotic plans degrade to the old behavior."""
+    metadata read on the driver — no Spark job). A global Aggregate
+    yields one row over empty input, so the bound is then at least 1.
+    Any failure returns None and the caller falls back to the measured
+    pass, so remote storage or exotic plans degrade to the old
+    behavior."""
     try:
         stack = [df._jdf.queryExecution().analyzed()]
+        global_agg = False
         while stack:
             node = stack.pop()
-            if node.nodeName() not in _CARD_NONINCREASING:
+            name = node.nodeName()
+            if name not in _CARD_NONINCREASING:
                 return None
+            if name == "Aggregate" and node.groupingExpressions().isEmpty():
+                global_agg = True
             for i in range(node.children().size()):
                 stack.append(node.children().apply(i))
         files = df.inputFiles()
@@ -117,13 +135,11 @@ def _footer_rows_upper(df) -> int | None:
 
         total = 0
         for f in files:
-            if not f.startswith("file:"):
+            path = local_path(f)
+            if path is None:
                 return None
-            path = f[len("file:"):]
-            while path.startswith("//"):
-                path = path[1:]
             total += pq.ParquetFile(path).metadata.num_rows
-        return total
+        return max(total, 1) if global_agg else total
     except Exception:  # noqa: BLE001
         return None
 
@@ -240,6 +256,31 @@ def disc_price() -> Column:
 
 def charge() -> Column:
     return dec("l_extendedprice") * one_minus("l_discount") * one_plus("l_tax")
+
+
+def local_frame(spark, rows, ddl: str):
+    """A driver-side result (a list of tuples or Rows) as a DataFrame
+    over a local relation.
+
+    ``spark.createDataFrame(<list>, ddl)`` plans as ``Scan ExistingRDD``
+    and re-pickles the rows through Python workers on every execution;
+    handing Spark a pyarrow.Table built against the DDL's own Arrow
+    schema instead plans as ``LocalTableScan`` (no Python workers, no
+    parallelize job). The schema is the DDL's, nullability included,
+    whatever the rows hold."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    schema = DataType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = [
+        pa.array([r[i] for r in rows], type=f.type)
+        for i, f in enumerate(arrow)
+    ]
+    return spark.createDataFrame(
+        pa.Table.from_arrays(cols, schema=arrow), schema
+    )
 
 
 # --- engine-neutral md5 hash integers ---------------------------------

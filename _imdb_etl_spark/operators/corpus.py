@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from _imdb_etl_spark.functions import (
     doc_permille_bucket,
     hex_prefix_int,
+    local_frame,
     md5_prefix_int_sql,
 )
 from _imdb_etl_spark.plans.registry import register
@@ -986,7 +987,8 @@ def bpe_train_rounds(
     against a bug shared by the Spark and DuckDB twins)."""
     merge_table, final_stream = _bpe_train(spark, docs, n_rounds)
     final_stream.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         merge_table,
         "merge_rank int, sym_a string, sym_b string, "
         "pair_cnt long, symbols_after long",
@@ -1376,7 +1378,8 @@ def bpe_train_batched_rounds(
     if old is not None:
         old.unpersist()
     prev.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out_rows,
         "merge_rank int, sym_a string, sym_b string, "
         "pair_cnt long, symbols_after long",

@@ -27,6 +27,7 @@ import pandas as pd  # module-level: pandas_udf resolves postponed hints here
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from _imdb_etl_spark.functions import local_frame
 from _imdb_etl_spark.plans.registry import register
 from _imdb_etl_spark.sources import load_tables, spread, stage_to_parquet
 
@@ -1287,8 +1288,8 @@ def neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     if n == 0:
         # no near-dup pairs -> empty graph; mirror the oracle's empty
         # result instead of dividing by zero below
-        return spark.createDataFrame(
-            [], "doc_id bigint, pagerank double, rank_order int"
+        return local_frame(
+            spark, [], "doc_id bigint, pagerank double, rank_order int"
         )
     ranks = nodes.select(
         "node", F.round(F.lit(1.0) / n, 9).alias("rank")

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from _imdb_etl_spark.functions import local_frame
 from _imdb_etl_spark.plans.registry import register
 from _imdb_etl_spark.sources import load_tables
 
@@ -232,7 +233,8 @@ def dq_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the action the pipeline runs anyway: the quality-gate count
     observed.where(F.col("n_chars") >= 200).count()
     m = obs.get
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 int(m["n_docs"]),

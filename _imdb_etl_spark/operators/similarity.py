@@ -24,6 +24,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from _imdb_etl_spark.functions import local_frame
 from _imdb_etl_spark.plans.registry import register
 from _imdb_etl_spark.sources import load_tables, spread, stage_sorted, stage_to_parquet
 
@@ -501,7 +502,7 @@ def sim_knn_ivf_trained_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
     ]
     cents = (
-        spark.createDataFrame(centers, "centroid_id long, ce array<double>")
+        local_frame(spark, centers, "centroid_id long, ce array<double>")
         .select(
             "centroid_id", "ce", F.sqrt(_dot("ce", "ce")).alias("cnrm")
         )

@@ -11,7 +11,7 @@ import pandas as pd  # module-level: pandas_udf resolves postponed hints here
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from _imdb_etl_spark.functions import dec, dsum
+from _imdb_etl_spark.functions import dec, dsum, local_frame
 from _imdb_etl_spark.plans.registry import register
 from _imdb_etl_spark.sources import load_tables, scoped_conf, stage_sorted
 
@@ -518,8 +518,8 @@ def range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         for band, lo, hi in _BANDS
         for b in range(lo // _BIN_WIDTH, (hi - 1) // _BIN_WIDTH + 1)
     ]
-    bands = spark.createDataFrame(
-        binned, "band string, lo long, hi long, bin long"
+    bands = local_frame(
+        spark, binned, "band string, lo long, hi long, bin long"
     )
     return (
         orders.withColumn(
@@ -1172,8 +1172,8 @@ def sketch_heavy_users_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for r in top
     ]
-    return spark.createDataFrame(
-        rows, "user_id bigint, exact_cnt bigint, within_bound boolean"
+    return local_frame(
+        spark, rows, "user_id bigint, exact_cnt bigint, within_bound boolean"
     ).orderBy(F.desc("exact_cnt"), "user_id")
 
 

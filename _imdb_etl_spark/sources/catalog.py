@@ -13,9 +13,14 @@ from __future__ import annotations
 
 import contextlib as _contextlib
 import os
+import stat
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from _imdb_etl_spark.functions import local_path
 
 DRIVER_TABLES = (
     "region",
@@ -66,9 +71,58 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
+# Session confs that change what parquet footer inference returns for
+# the same file; part of the schema-cache key so flipping one re-infers.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_SCHEMA_CACHE_MAX = 256
+_SCHEMAS: dict[tuple, StructType] = {}
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a regular file's schema
+    once per process.
+
+    Schema inference is a Spark job (footer read on an executor), paid
+    on every read without a schema — at dashboard scale a visible share
+    of each query's build time. The StructType Spark inferred is kept,
+    keyed on the file's identity (real path, size, mtime in ns) and the
+    inference confs, and later reads pass it back via ``.schema()``, so
+    no Spark-vs-pyarrow type mapping is involved. A rewritten file or a
+    flipped conf misses and re-infers. Directories (and anything not a
+    regular local file) are read as before: their schema can change by
+    adding a part file without touching the directory's own stat."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (
+        os.path.realpath(path),
+        st.st_size,
+        st.st_mtime_ns,
+        tuple(spark.conf.get(k) for k in _INFERENCE_CONFS),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _SCHEMAS_LOCK:
+        if len(_SCHEMAS) >= _SCHEMA_CACHE_MAX:
+            _SCHEMAS.pop(next(iter(_SCHEMAS)))
+        _SCHEMAS[key] = df.schema
+    return df
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _tune(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         df = normalize_event_ts(df)
     return df
@@ -247,14 +301,13 @@ def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
         # ~128 MiB (spark.sql.files.maxPartitionBytes default), which the
         # local-path stat refines so a few huge files don't trigger a
         # pointless full-table shuffle
+        paths = [local_path(f) for f in files]
         try:
-            sizes = [
-                os.stat(f.removeprefix("file:")).st_size
-                for f in files
-                if f.startswith("file:")
-            ]
-            if len(sizes) == len(files):
-                est = sum(max(1, -(-s // (128 << 20))) for s in sizes)
+            if None not in paths:
+                est = sum(
+                    max(1, -(-os.stat(p).st_size // (128 << 20)))
+                    for p in paths
+                )
         except OSError:
             pass
     if 0 < est < target:

@@ -15,7 +15,12 @@ plus the file-level writers a Spark deployment actually uses:
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
+
+from _imdb_etl_spark.functions import local_path
 
 
 def write_parquet(
@@ -91,12 +96,38 @@ def save_as_table(
 ) -> None:
     """CTAS (S7): materialize into the session catalog. ``bucket_by``
     = (n_buckets, cols) pre-shuffles once at write so every later join
-    or aggregation on those columns skips its exchange."""
+    or aggregation on those columns skips its exchange.
+
+    ``mode="overwrite"`` is the reference's CREATE OR REPLACE TABLE. A
+    catalog that forgot the table (the in-memory catalog of an earlier
+    process) leaves its managed directory behind, and Spark refuses to
+    create the table over it (LOCATION_ALREADY_EXISTS); that orphaned
+    directory is removed first, on the driver, with no Spark job."""
+    if mode == "overwrite":
+        _drop_orphan_location(df.sparkSession, name)
     w = df.write.mode(mode).format("parquet")
     if bucket_by:
         n, cols = bucket_by
         w = w.bucketBy(n, *cols).sortBy(*cols)
     w.saveAsTable(name)
+
+
+def _drop_orphan_location(spark: SparkSession, name: str) -> None:
+    """Remove the default managed location of table ``name`` in the
+    current database when the catalog has no such table. Only local
+    (``file:``) warehouses are handled; elsewhere Spark's own error
+    stands."""
+    cat = spark.catalog
+    db = cat.currentDatabase()
+    # qualified, so a temp view of the same name does not count
+    if "." in name or cat.tableExists(f"{db}.{name}"):
+        return
+    root = local_path(cat.getDatabase(db).locationUri)
+    if root is not None:
+        # Spark lower-cases the default path unless caseSensitive is on
+        if spark.conf.get("spark.sql.caseSensitive") != "true":
+            name = name.lower()
+        shutil.rmtree(os.path.join(root, name), ignore_errors=True)
 
 
 def drop_table(spark: SparkSession, name: str) -> None:

@@ -39,11 +39,11 @@ def read_table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame
     from a batch read, directory source narrowed to the table's file by
     pathGlobFilter. The single definition of the stream-source pattern
     — events and documents streams both build on it."""
-    from _imdb_etl_spark.sources.catalog import _tune
+    from _imdb_etl_spark.sources.catalog import _tune, read_parquet
 
     _tune(spark)
     path = os.path.join(sf_dir, f"{table}.parquet")
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = read_parquet(spark, path).schema
     return (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", f"{table}.parquet")
@@ -381,7 +381,7 @@ def streaming_foreachbatch_upsert(
     import shutil
 
     from _imdb_etl_spark.sources import load_tables
-    from _imdb_etl_spark.sources.catalog import reap_stale_pid_dirs
+    from _imdb_etl_spark.sources.catalog import read_parquet, reap_stale_pid_dirs
 
     warehouse = "/root/repo/spark-warehouse"
     os.makedirs(warehouse, exist_ok=True)
@@ -393,7 +393,7 @@ def streaming_foreachbatch_upsert(
 
     (events,) = load_tables(spark, sf_dir, "events")
     events.repartition(8).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
+    schema = read_parquet(spark, src).schema
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         part = batch_df.groupBy("user_id").agg(

@@ -83,6 +83,32 @@ def test_materialize_survives_stage_deletion(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
+def test_materialize_reruns_over_an_existing_warehouse(fresh_python, tmp_path):
+    """CTAS is CREATE OR REPLACE: a second process pointed at a
+    warehouse that still holds the first run's managed-table
+    directories (its in-memory catalog is gone) must replace them."""
+    from tests import fixtures
+
+    stage = str(tmp_path / "stage")
+    fixtures.generate(stage, n=50, seed=3)
+    code = f"""
+        from _imdb_etl_spark.etl.star import materialize_pipeline
+        from _imdb_etl_spark.session import get_spark
+
+        spark = get_spark(
+            "ctas-rerun",
+            master="local[2]",
+            shuffle_partitions=2,
+            extra_conf={{"spark.sql.warehouse.dir": {str(tmp_path / "wh")!r}}},
+        )
+        t = materialize_pipeline(spark, {stage!r})
+        print(t["dim_movies"].count())
+        spark.stop()
+        """
+    for _ in range(2):
+        assert fresh_python(code).split()[-1] == "50"
+
+
 def test_malformed_names_dropped(tables):
     # ON_ERROR='CONTINUE' semantics: the injected bad-date rows are gone
     assert tables["name_staging"].where(F.col("name").startswith("Broken")).count() == 0

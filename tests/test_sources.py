@@ -311,3 +311,91 @@ def test_scoped_conf_restores_on_exception(spark):
             raise RuntimeError("boom")
     assert spark.conf.get(set_key) == old
     assert spark.conf.get(unset_key) == default
+
+
+def _jobs_run(spark, group, fn):
+    """Call ``fn()`` under a job group; return its result and the ids
+    of the Spark jobs it ran (the statusTracker idiom of
+    test_broadcast_gate_footer_short_circuit)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job probe")
+    try:
+        return fn(), sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setJobGroup(None, None)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_read_parquet_infers_a_file_schema_once(spark, tmp_path):
+    """A second read of the same parquet file reuses the schema Spark
+    inferred the first time: identical schema, zero Spark jobs. A file
+    rewritten with a new column is inferred again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from _imdb_etl_spark.sources.catalog import _tune, read_parquet
+
+    _tune(spark)
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2], "s": ["x", None]}), path)
+
+    first, jobs = _jobs_run(spark, "schema-first", lambda: read_parquet(spark, path))
+    assert jobs != []  # inference is a job: the probe can see one
+    again, jobs = _jobs_run(spark, "schema-again", lambda: read_parquet(spark, path))
+    assert jobs == []
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+    pq.write_table(pa.table({"a": [3], "s": ["y"], "b": [2.5]}), path)
+    assert read_parquet(spark, path).columns == ["a", "s", "b"]
+
+
+def test_read_parquet_schema_cache_keys_on_inference_confs(spark, tmp_path):
+    """nanosAsLong decides how a TIMESTAMP(NANOS) column is inferred,
+    so flipping it must miss the cache and infer again: with it off,
+    Spark's own inference rejects the column, where a cache hit would
+    have handed back the bigint schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from _imdb_etl_spark.sources import scoped_conf
+    from _imdb_etl_spark.sources.catalog import _tune, read_parquet
+
+    _tune(spark)  # nanosAsLong on
+    path = str(tmp_path / "ns.parquet")
+    pq.write_table(
+        pa.table({"ts": pa.array([1_000_000_000_123], pa.timestamp("ns"))}),
+        path,
+    )
+    assert dict(read_parquet(spark, path).dtypes)["ts"] == "bigint"
+    with scoped_conf(spark, {"spark.sql.legacy.parquet.nanosAsLong": "false"}):
+        with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
+            read_parquet(spark, path)
+    assert dict(read_parquet(spark, path).dtypes)["ts"] == "bigint"
+
+def test_local_frame_round_trips_as_local_relation(spark):
+    """local_frame keeps the DDL's schema and every value, None
+    included, for each column type its callers use, and plans as a
+    LocalTableScan rather than a Python-fed RDD scan."""
+    from pyspark.sql import functions as F
+
+    from _imdb_etl_spark.functions import local_frame
+
+    ddl = "i int, l bigint, s string, b boolean, d double, v array<double>"
+    rows = [
+        (1, 1 << 40, "x", True, 1.5, [1.0, None]),
+        (None, None, None, None, None, None),
+        (-3, 0, "", False, -2.25, []),
+    ]
+    want = spark.createDataFrame(rows, ddl)
+    df = local_frame(spark, rows, ddl)
+    assert df.schema == want.schema
+    assert [tuple(r) for r in df.collect()] == rows
+    plan = df.orderBy(F.desc("i"))._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+    empty = local_frame(spark, [], ddl)
+    assert empty.schema == want.schema
+    assert empty.collect() == []
